@@ -16,31 +16,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 def _machine_state() -> dict:
     """Load + CPU-frequency snapshot; a high START load means another
     workload is still releasing cores and the run is contaminated
-    (exactly how the r7 268s-vs-196s sf1 artifact was caught)."""
-    state: dict = {}
-    try:
-        state["load_avg_1m"] = round(os.getloadavg()[0], 2)
-    except OSError:
-        pass
-    try:
-        import glob as _glob
+    (exactly how the r7 268s-vs-196s sf1 artifact was caught). The
+    shared probe, cut to the keys this script has always reported."""
+    from scripts.bench_protocol import machine_state
 
-        freqs = []
-        for f in _glob.glob(
-            "/sys/devices/system/cpu/cpu*/cpufreq/scaling_cur_freq"
-        ):
-            with open(f) as fh:
-                freqs.append(int(fh.read().strip()) / 1000.0)
-        if not freqs:  # fallback: /proc/cpuinfo reports MHz directly
-            with open("/proc/cpuinfo") as fh:
-                for line in fh:
-                    if line.lower().startswith("cpu mhz"):
-                        freqs.append(float(line.split(":", 1)[1]))
-        if freqs:
-            state["cpu_mhz_mean"] = round(sum(freqs) / len(freqs), 0)
-    except (OSError, ValueError):
-        pass
-    return state
+    state = machine_state()
+    return {k: state[k] for k in ("load_avg_1m", "cpu_mhz_mean")
+            if k in state}
 
 
 def main() -> None:

@@ -1324,6 +1324,20 @@ def _ddl_of(df: DataFrame) -> str:
     )
 
 
+def _saved_artifacts(spark, path: str, meta: dict) -> "list[tuple[str, str]]":
+    """(name, DDL) of a saved index's flat artifact dirs. The schema
+    comes from the manifest when the layout recorded it (save/retrain
+    do since r11); pre-r11 layouts fall back to footer inference, safe
+    because build guarantees non-empty artifact dirs (unlike the
+    maybe-empty dedup sidecars)."""
+    names = ["cells"] + (["pq_codes"] if meta["with_pq"] else [])
+    return [
+        (name, meta.get("cells_ddl" if name == "cells" else "codes_ddl")
+         or _ddl_of(spark.read.parquet(f"{path}/{name}")))
+        for name in names
+    ]
+
+
 class AnnIndex:
     """Shared ANN index artifacts for one corpus, built once and reused
     across every search and dedup over it (VERDICT r6 item 7: without
@@ -1611,25 +1625,12 @@ class AnnIndex:
                 capacity=self.capacity,
             )
         from ..streaming.ann_ingest import check_no_stream_epochs
-        from ..streaming.compact import (
-            _acquire_compact_marker,
-            _HadoopFS,
-            check_not_compacting,
-        )
+        from ..streaming.compact import check_not_compacting, maintenance_lease
+        from .probe import key_bloom, parallel_writes
 
         spark = new_vectors.sparkSession
-        # Root marker FIRST, fences under it (ADVICE r11): holding the
-        # marker makes new ingest micro-batches fail fast, so the
-        # no-stream-epochs check below can only be raced by a batch
-        # already past its own marker check and mid-write — the
-        # narrowest window the marker protocol allows. The marker also
-        # closes append's own torn-read window: a loader listing cells
-        # after the cells append but pq_codes before the codes append
-        # would see a routed vector with no code.
-        lease = _acquire_compact_marker(
-            _HadoopFS(spark, path), path, stale_after_sec, force
-        )
-        try:
+
+        def fence():
             # batch appends and a live vector stream are two unfenced
             # writers with separate id-dedup views — absorb first
             check_no_stream_epochs(spark, path, "append to")
@@ -1638,12 +1639,18 @@ class AnnIndex:
             check_not_compacting(spark, f"{path}/cells", "append to")
             if new_codes is not None:
                 check_not_compacting(spark, f"{path}/pq_codes", "append to")
-        except BaseException:
-            lease.release()  # refusal — nothing mutated, clean marker
-            raise
-        from .probe import key_bloom, parallel_writes
 
-        try:
+        # Root marker FIRST, fences under it (ADVICE r11): holding the
+        # marker makes new ingest micro-batches fail fast, so the
+        # no-stream-epochs check can only be raced by a batch already
+        # past its own marker check and mid-write — the narrowest
+        # window the marker protocol allows. The marker also closes
+        # append's own torn-read window: a loader listing cells after
+        # the cells append but pq_codes before the codes append would
+        # see a routed vector with no code.
+        with maintenance_lease(spark, path, force=force,
+                               stale_after_sec=stale_after_sec,
+                               fence=fence):
             # appended files keep the artifact's within-file id order
             # and bloom (local sort, no shuffle) so probes prune them.
             # The two appends target disjoint artifact dirs under the
@@ -1663,10 +1670,6 @@ class AnnIndex:
             model = None
             if new_codes is not None:
                 model = (spark.read.parquet(f"{path}/pq_codes"), books)
-        except BaseException:
-            lease.abandon()  # half-append: readers must fail fast
-            raise
-        lease.release()
         return AnnIndex(
             self.vectors.unionByName(new_vectors),
             self.anchors,
@@ -1795,31 +1798,22 @@ class AnnIndex:
 
         import json
 
-        from ..streaming.compact import (
-            _HadoopFS,
-            _acquire_compact_marker,
-        )
+        from contextlib import ExitStack
 
         from ..streaming.ann_ingest import check_no_stream_epochs
+        from ..streaming.compact import maintenance_lease
+        from .probe import key_bloom, parallel_writes, range_cluster
 
         spark = self.vectors.sparkSession
-        fs = _HadoopFS(spark, path)
         # marker FIRST, fence under it (ADVICE r11): with the root
         # marker held, new ingest micro-batches fail fast, so only a
         # batch already mid-write can race the check. A retrain swaps
         # the anchors; stream-sidecar rows were assigned under the OLD
         # set and would absorb into a corrupted index — absorb first.
-        lease = _acquire_compact_marker(fs, path, stale_after_sec, force)
-        try:
-            check_no_stream_epochs(spark, path, "retrain")
-        except BaseException:
-            lease.release()  # refusal — nothing mutated, clean marker
-            raise
-        from contextlib import ExitStack
-
-        from .probe import key_bloom, parallel_writes, range_cluster
-
-        try:
+        with maintenance_lease(
+            spark, path, force=force, stale_after_sec=stale_after_sec,
+            fence=lambda: check_no_stream_epochs(spark, path, "retrain"),
+        ):
             # pin around the range writes: the boundary-sampling job
             # would otherwise re-run the whole re-assignment /
             # re-encode lineage (no exchange to shuffle-reuse).
@@ -1867,10 +1861,6 @@ class AnnIndex:
             single_row_df(
                 spark, "manifest string", json.dumps(retrain_meta)
             ).write.mode("overwrite").parquet(f"{path}/manifest")
-        except BaseException:
-            lease.abandon()  # marker stays; readers fail fast
-            raise
-        lease.release()
         # fresh-read handle, same discipline as append(path=): frozen
         # listing over exactly the rewritten artifacts
         stored_anchors = spark.read.parquet(f"{path}/anchors")
@@ -1904,36 +1894,19 @@ class AnnIndex:
         duplicate cells/codes rows would change serving results. Still
         maintenance: run without concurrent queries, like any
         VACUUM."""
-        import json
-
-        from ..streaming.compact import (
-            check_not_compacting,
-            compact_flat_dir,
-        )
+        from ..streaming.ann_ingest import _index_meta
+        from ..streaming.compact import check_not_compacting, compact_flat_dir
 
         # a ROOT marker means a remove()/retrain() is running or
         # crashed mid-way: the recovery is that op's force=True re-run,
         # not a fold over its inconsistent intermediate state
         check_not_compacting(spark, path, "compact")
-        meta = json.loads(
-            spark.read.parquet(f"{path}/manifest").collect()[0]["manifest"]
-        )
+        meta = _index_meta(spark, path)
         stats = {}
-        targets = ["cells"] + (["pq_codes"] if meta["with_pq"] else [])
-        for name in targets:
-            full = f"{path}/{name}"
-            # schema from the manifest when the layout recorded it
-            # (save/retrain do since r11); pre-r11 layouts fall back to
-            # footer inference, safe because build guarantees non-empty
-            # artifact dirs (unlike the maybe-empty dedup sidecars)
-            ddl = meta.get(
-                "cells_ddl" if name == "cells" else "codes_ddl"
-            ) or ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in spark.read.parquet(full).schema.fields
-            )
+        for name, ddl in _saved_artifacts(spark, path, meta):
             stats[name] = compact_flat_dir(
-                spark, full, ddl, [meta["id_col"]], target_shards,
+                spark, f"{path}/{name}", ddl, [meta["id_col"]],
+                target_shards,
                 stale_after_sec=stale_after_sec, force=force,
                 cluster_by=[meta["id_col"]],
             )
@@ -1964,106 +1937,32 @@ class AnnIndex:
         ``ids`` is a list/tuple or a single-column DataFrame; values
         are cast to the artifact's id type.
 
-        ``_lease`` (private) lends an already-held root marker lease
-        in, same contract as ``absorb_stream``: the owner
+        ``_lease`` (private) is passed on as ``takedown_fold``'s
+        ``lent=``, same contract as ``absorb_stream``: the owner
         (``takedown_stream_vectors``) spans one marker across its
-        whole absorb → purge chain; a refusal raises with the borrowed
-        lease untouched, a mid-fold failure abandons it."""
-        import json
+        whole absorb → purge chain, which it fenced when it took the
+        marker and re-checks for landed stream epochs at its close,
+        so the stream-epoch fence here is skipped; the borrowed lease
+        is never released here, and a mid-fold failure abandons it."""
+        from ..streaming.ann_ingest import _index_meta, check_no_stream_epochs
+        from ..streaming.compact import takedown_fold
 
-        from ..streaming.compact import (
-            _acquire_compact_marker,
-            _HadoopFS,
-            compact_flat_dir,
-        )
-
-        meta = json.loads(
-            spark.read.parquet(f"{path}/manifest").collect()[0]["manifest"]
-        )
+        meta = _index_meta(spark, path)
         id_col = meta["id_col"]
-        from .dedup import _removal_ids
-
-        rid = _removal_ids(spark, ids)
-        rid_cp = None
-        if isinstance(ids, DataFrame):
-            # every artifact fold broadcasts this frame; one eager
-            # batch-sized checkpoint stops each broadcast re-evaluating
-            # the caller's arbitrary upstream plan (VERDICT r14
-            # next-round #1); freed after the folds.
-            rid = rid_cp = rid.localCheckpoint(eager=True)
-        from ..streaming.ann_ingest import check_no_stream_epochs
-
-        stats = {}
-        targets = ["cells"] + (["pq_codes"] if meta["with_pq"] else [])
-        owns = _lease is None
-        root = _lease if _lease is not None else _acquire_compact_marker(
-            _HadoopFS(spark, path), path, stale_after_sec, force
-        )
+        targets = [
+            (name, ddl, [id_col], [id_col], id_col)
+            for name, ddl in _saved_artifacts(spark, path, meta)
+        ]
         # fence under the marker (ADVICE r11): a remove that purged
         # only the flat dirs would leave the removed vectors serving
         # from the stream sidecars; with the marker held, new ingest
         # batches fail fast before the check runs
-        try:
-            check_no_stream_epochs(spark, path, "remove from")
-        except BaseException:
-            if owns:
-                root.release()  # refusal — nothing mutated, clean marker
-            raise
-        def _fold_one(name):
-            # one artifact's fold pipeline; cells and pq_codes are
-            # independent DIRS (each fold holds its own per-dir marker
-            # and dot-staging dir) under the one held root marker, so
-            # the pipelines overlap (guide §2.6). Any crash state
-            # converges via remove(force=True) exactly as with the
-            # sequential order — the root marker, not the fold order,
-            # is the recovery contract. rows_before/rows_after ride
-            # the fold job as observed metrics (guide §1/§2.4) — the
-            # two extra full-artifact count() scans per fold that used
-            # to produce them are gone (r15).
-            full = f"{path}/{name}"
-            ddl = meta.get(
-                "cells_ddl" if name == "cells" else "codes_ddl"
-            ) or ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in spark.read.parquet(full).schema.fields
-            )
-            fields = spark.createDataFrame([], ddl).schema.fields
-            id_type = next(
-                f.dataType.simpleString() for f in fields
-                if f.name == id_col
-            )
-            keyed = F.broadcast(
-                rid.select(F.col("__rid").cast(id_type).alias("__rid"))
-            )
-
-            def drop_removed(df: DataFrame, _k=keyed) -> DataFrame:
-                return df.join(
-                    _k, df[id_col] == _k["__rid"], "left_anti"
-                )
-
-            stats[name] = compact_flat_dir(
-                spark, full, ddl, [id_col], force=force,
-                stale_after_sec=stale_after_sec,
-                transform=drop_removed, cluster_by=[id_col],
-            )
-
-        from .probe import parallel_writes
-
-        from ..tools.checkpoints import free_local_checkpoint
-
-        try:
-            parallel_writes(*[
-                lambda _n=name: _fold_one(_n) for name in targets
-            ])
-        except BaseException:
-            root.abandon()  # marker stays: readers must not resume
-            raise
-        finally:
-            # folds done (or failed) — free the removal-id blocks
-            free_local_checkpoint(rid_cp)
-        if owns:
-            root.release()
-        return stats
+        return takedown_fold(
+            spark, path, targets, ids, force=force,
+            stale_after_sec=stale_after_sec,
+            fence=lambda: check_no_stream_epochs(spark, path, "remove from"),
+            lent=_lease,
+        )
 
     # -- at-rest form: a 100 TB index is built once and SERVED many
     # -- times across sessions; rebuilding Lloyd iterations per process
@@ -2172,15 +2071,12 @@ class AnnIndex:
         ``retrain(force=True)`` / a ``remove``/``compact`` re-run,
         never to serve queries (the artifacts are untrustworthy until
         maintenance converges)."""
-        import json
-
+        from ..streaming.ann_ingest import _index_meta
         from ..streaming.compact import check_not_compacting
 
         if not force:
             check_not_compacting(spark, path, "load")  # retrain/remove
-        meta = json.loads(
-            spark.read.parquet(f"{path}/manifest").collect()[0]["manifest"]
-        )
+        meta = _index_meta(spark, path)
         if not force:
             check_not_compacting(spark, f"{path}/cells", "load")
             if meta["with_pq"]:
@@ -2234,9 +2130,8 @@ class AnnIndex:
         content maintenance (``append(path=)``/``remove``/``retrain
         (path=)``) is refused while stream epochs exist, so this
         handle is for serving — absorb to get a maintainable index."""
-        import json
-
         from ..streaming.ann_ingest import (
+            _index_meta,
             _read_stream_rows,
             check_stream_parity,
         )
@@ -2247,9 +2142,7 @@ class AnnIndex:
         # (restart the ingest) before serving, not silently drop the
         # vector from the ADC rerank
         check_stream_parity(spark, path, upto_epoch)
-        meta = json.loads(
-            spark.read.parquet(f"{path}/manifest").collect()[0]["manifest"]
-        )
+        meta = _index_meta(spark, path)
         if not meta.get("anchors_stored"):
             raise ValueError(
                 f"index at {path} stores no anchors — only saved "

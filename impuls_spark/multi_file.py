@@ -84,6 +84,22 @@ def prune_outdated_feeds(
     return ordered[cutoff:]
 
 
+def _window_key(window: DateRange) -> list:
+    """JSON form of a validity window, as recorded in ``_SNAPSHOT_OK``."""
+    return [d and d.isoformat() for d in (window.start, window.end)]
+
+
+def _snapshot_window(snap: str) -> "list | None":
+    """The window a complete snapshot was truncated to; ``None`` when
+    the snapshot is missing or incomplete (no ``_SNAPSHOT_OK``) or
+    predates window recording — any of which means rebuild."""
+    try:
+        with open(os.path.join(snap, "_SNAPSHOT_OK")) as fh:
+            return json.load(fh).get("window")
+    except (OSError, ValueError):
+        return None
+
+
 @dataclass
 class MultiFile:
     """``provider`` returns the needed versions, newest last.
@@ -195,7 +211,8 @@ class MultiFile:
             snap = self._snapshot_dir(f.version)
             save_feed_parquet(feed, snap)
             with open(os.path.join(snap, "_SNAPSHOT_OK"), "w") as fh:
-                json.dump({"version": f.version}, fh)
+                json.dump({"version": f.version,
+                           "window": _window_key(window)}, fh)
         finally:
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
 
@@ -210,12 +227,19 @@ class MultiFile:
             resources, self._workspace(), from_cache=self.options.from_cache
         )
 
-        # invalidate snapshots older than their (re-fetched) input
+        # invalidate snapshots older than their (re-fetched) input, and
+        # snapshots truncated to a validity window that has since
+        # changed (a newer version now ends an older one's window)
+        ordered = sorted(feeds, key=lambda f: f.start_date)
+        windows = {
+            f.version: self._validity_window(ordered, i)
+            for i, f in enumerate(ordered)
+        }
         to_build: list[IntermediateFeed] = []
-        for f in feeds:
+        for f in ordered:
             snap = self._snapshot_dir(f.version)
-            marker = os.path.join(snap, "_SNAPSHOT_OK")
-            if fetched[f"{f.version}.input"].changed or not os.path.exists(marker):
+            if (fetched[f"{f.version}.input"].changed
+                    or _snapshot_window(snap) != _window_key(windows[f.version])):
                 shutil.rmtree(snap, ignore_errors=True)
                 to_build.append(f)
 
@@ -237,12 +261,7 @@ class MultiFile:
         # reference is forced to run them sequentially
         # (multi_file.py:53-57); SURVEY §3.2 names this as the designed
         # Spark-era win.
-        ordered = sorted(feeds, key=lambda f: f.start_date)
-        builds = [
-            (f, self._validity_window(ordered, i))
-            for i, f in enumerate(ordered)
-            if f in to_build
-        ]
+        builds = [(f, windows[f.version]) for f in to_build]
         workers = max(1, min(self.max_parallel_intermediates, len(builds)))
         if workers == 1:
             for f, window in builds:

@@ -144,14 +144,10 @@ def remove_from_corpus(
     Returns ``{partitions_affected, partitions_deleted, rows_before,
     rows_after}`` (row counts over the affected partitions only)."""
     from ..streaming.compact import (
-        _acquire_compact_marker,
-        _delete_leaf_partitions,
-        _emptied_combos,
         _epoch_dirs,
         _HadoopFS,
-        _rid_frame,
-        _takedown_scan,
-        partition_membership_pred,
+        _takedown_partitions,
+        maintenance_lease,
     )
 
     part_cols = list(partition_by)
@@ -161,9 +157,6 @@ def remove_from_corpus(
             "unpartitioned corpus has no directories to prune — "
             "rewrite it wholesale with a filter instead)"
         )
-    rid_cp = _rid_frame(spark, ids).localCheckpoint(eager=True)
-    rid = F.broadcast(rid_cp)
-
     fs = _HadoopFS(spark, path)
     if _epoch_dirs(path, fs):
         raise ValueError(
@@ -175,42 +168,12 @@ def remove_from_corpus(
             "the (__epoch, *partition_by) layout and rebuilds the "
             "dedup index sidecars"
         )
-    lease = _acquire_compact_marker(fs, path, stale_after_sec, force)
-    try:
-        full = spark.read.parquet(path)
-        # ONE column-pruned pass computes everything the rewrite needs
-        # (locate + before/after bookkeeping fused — r11 cut this
-        # operator from 5 scans of the data to the 2-scan minimum:
-        # this stats pass + the rewrite's own read)
-        per_part, stats = _takedown_scan(full, rid, part_cols, key_col)
-        if per_part:
-            pred = partition_membership_pred(
-                part_cols,
-                [combo for combo, _, _, _ in per_part],
-                [pk for _, pk, _, _ in per_part],
-            )
-            keep = full.filter(pred).join(
-                rid, full[key_col].cast("string") == rid["__rid"],
-                "left_anti",
-            )
-            write_corpus(
-                keep, path, partition_by=tuple(part_cols),
-                sort_by=tuple(sort_by), target_shards=target_shards,
-                mode="overwrite", dynamic_overwrite=True,
-            )
-            stats["partitions_deleted"] = _delete_leaf_partitions(
-                fs, path, part_cols, _emptied_combos(per_part, part_cols)
-            )
-    except BaseException:
-        lease.abandon()  # marker stays: readers must not see half-state
-        raise
-    lease.release()
-    # scan + rewrite have fully evaluated — free the takedown-ids
-    # checkpoint deterministically (guide §5)
-    from ..tools.checkpoints import free_local_checkpoint
-
-    free_local_checkpoint(rid_cp)
-    return stats
+    with maintenance_lease(spark, path, force=force,
+                           stale_after_sec=stale_after_sec):
+        return _takedown_partitions(
+            spark, fs, path, ids, part_cols, key_col, sort_by,
+            target_shards,
+        )
 
 
 def write_training_shards(
@@ -368,9 +331,9 @@ def compact_shards(
     dropped, in-flight ones finish or crash under their own markers,
     and the abandoned root marker fail-fasts loaders either way."""
     from ..streaming.compact import (
-        _acquire_compact_marker,
         _HadoopFS,
         compact_flat_dir,
+        maintenance_lease,
     )
 
     manifest = _read_shards_manifest(spark, path)
@@ -394,9 +357,9 @@ def compact_shards(
     ddl = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in sample.schema.fields
     )
-    lease = _acquire_compact_marker(fs, path, stale_after_sec, force)
     stats: dict = {"shards_total": len(shard_dirs), "folded": 0,
                    "skipped": 0, "files_before": 0, "files_after": 0}
+
     def fold_one(full: str) -> dict:
         return compact_flat_dir(
             spark, full, ddl, [key_col], target_shards=fps,
@@ -404,7 +367,10 @@ def compact_shards(
             sort_within=["shuffle_key"],
         )
 
-    try:
+    # loaders must not read the half-folded mix: a failure leaves the
+    # root marker
+    with maintenance_lease(spark, path, force=force,
+                           stale_after_sec=stale_after_sec):
         if max_concurrent > 1:
             from concurrent.futures import ThreadPoolExecutor
 
@@ -424,10 +390,6 @@ def compact_shards(
             stats["files_before"] += r["files_before"]
             stats["files_after"] += r["files_after"]
             stats["folded" if not r.get("skipped") else "skipped"] += 1
-    except BaseException:
-        lease.abandon()  # loaders must not read the half-folded mix
-        raise
-    lease.release()
     return stats
 
 
@@ -482,11 +444,8 @@ def remove_from_shards(
     shards_affected, shards_deleted, rows_before, rows_after}`` (row
     counts over the affected shards only)."""
     from ..llm.sampling import _SHARD_DIGITS
-    from ..streaming.compact import (
-        _acquire_compact_marker,
-        _HadoopFS,
-        _rid_frame,
-    )
+    from ..streaming.compact import _HadoopFS, _rid_frame, maintenance_lease
+    from ..tools.checkpoints import free_local_checkpoint
 
     manifest = _read_shards_manifest(spark, path)
     passed = {"key_col": key_col, "salt": salt,
@@ -538,66 +497,68 @@ def remove_from_shards(
             F.md5(F.concat_ws(":", F.lit(salt), F.col("__rid"))), 1, width
         ),
     ).localCheckpoint(eager=True)  # tiny; fixes the plan for reuse
-    affected = sorted(
-        {r["__shard"] for r in rid.select("__shard").distinct().collect()}
-        & set(shard_dirs)
-    )
-    if not affected:
-        return {"shards_total": len(shard_dirs), "shards_affected": 0,
-                "shards_deleted": 0, "rows_before": 0, "rows_after": 0}
-
-    lease = _acquire_compact_marker(fs, path, stale_after_sec, force)
     try:
-        pruned = spark.read.parquet(path).filter(
-            F.col("shard").isin(affected)
+        affected = sorted(
+            {r["__shard"] for r in rid.select("__shard").distinct().collect()}
+            & set(shard_dirs)
         )
-        # ONE pass over the affected shards computes the before/after
-        # bookkeeping AND the survivor-shard set (decided BEFORE the
-        # overwrite — a post-write read would still see the
-        # un-overwritten all-removed dirs and miscount them); with the
-        # rewrite's own read that is the 2-scan minimum for the
-        # affected shards
-        per_shard = {
-            row["shard"]: (row["__n"], row["__n_removed"])
-            for row in (
-                pruned.join(
-                    F.broadcast(rid),
-                    pruned[key_col].cast("string") == rid["__rid"],
-                    "left",
-                )
-                .groupBy("shard")
-                .agg(
-                    F.count("*").alias("__n"),
-                    F.count(rid["__rid"]).alias("__n_removed"),
-                )
-                .collect()
+        if not affected:
+            return {"shards_total": len(shard_dirs), "shards_affected": 0,
+                    "shards_deleted": 0, "rows_before": 0, "rows_after": 0}
+
+        # a failure leaves the marker: loaders must not ship the text
+        with maintenance_lease(spark, path, force=force,
+                               stale_after_sec=stale_after_sec):
+            pruned = spark.read.parquet(path).filter(
+                F.col("shard").isin(affected)
             )
-        }
-        rows_before = sum(n for n, _ in per_shard.values())
-        rows_after = sum(n - r for n, r in per_shard.values())
-        survivor_shards = {s for s, (n, r) in per_shard.items() if n > r}
-        keep = pruned.join(
-            F.broadcast(rid),
-            pruned[key_col].cast("string") == rid["__rid"],
-            "left_anti",
-        )
-        file_salt = F.pmod(F.crc32(F.col("shuffle_key")),
-                           F.lit(max(files_per_shard, 1)))
-        (
-            keep.repartition(F.col("shard"), file_salt)
-            .sortWithinPartitions("shard", "shuffle_key")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("shard")
-            .parquet(path)
-        )
-        deleted = [s for s in affected if s not in survivor_shards]
-        for s in deleted:
-            fs.delete(shard_dirs[s])
-    except BaseException:
-        lease.abandon()  # marker stays: loaders must not ship the text
-        raise
-    lease.release()
+            # ONE pass over the affected shards computes the before/after
+            # bookkeeping AND the survivor-shard set (decided BEFORE the
+            # overwrite — a post-write read would still see the
+            # un-overwritten all-removed dirs and miscount them); with the
+            # rewrite's own read that is the 2-scan minimum for the
+            # affected shards
+            per_shard = {
+                row["shard"]: (row["__n"], row["__n_removed"])
+                for row in (
+                    pruned.join(
+                        F.broadcast(rid),
+                        pruned[key_col].cast("string") == rid["__rid"],
+                        "left",
+                    )
+                    .groupBy("shard")
+                    .agg(
+                        F.count("*").alias("__n"),
+                        F.count(rid["__rid"]).alias("__n_removed"),
+                    )
+                    .collect()
+                )
+            }
+            rows_before = sum(n for n, _ in per_shard.values())
+            rows_after = sum(n - r for n, r in per_shard.values())
+            survivor_shards = {s for s, (n, r) in per_shard.items() if n > r}
+            keep = pruned.join(
+                F.broadcast(rid),
+                pruned[key_col].cast("string") == rid["__rid"],
+                "left_anti",
+            )
+            file_salt = F.pmod(F.crc32(F.col("shuffle_key")),
+                               F.lit(max(files_per_shard, 1)))
+            (
+                keep.repartition(F.col("shard"), file_salt)
+                .sortWithinPartitions("shard", "shuffle_key")
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("shard")
+                .parquet(path)
+            )
+            deleted = [s for s in affected if s not in survivor_shards]
+            for s in deleted:
+                fs.delete(shard_dirs[s])
+    finally:
+        # the located-ids checkpoint: freed on every exit, early
+        # return included (guide §5)
+        free_local_checkpoint(rid)
     return {
         "shards_total": len(shard_dirs),
         "shards_affected": len(affected),

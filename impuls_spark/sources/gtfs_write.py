@@ -132,6 +132,11 @@ def save_gtfs(
         ordered = [
             fn if fn.endswith(".txt") else fn + ".txt" for fn in headers
         ]
+
+        def _head(fname: str) -> bytes:
+            header = headers.get(fname) or headers[fname.removesuffix(".txt")]
+            return (",".join(_csv_quote(h) for h in header) + "\n").encode()
+
         if as_zip:
             # r15 (VERDICT r14 what's-wrong #4, guide §2.6/§6): the
             # zip stitch was one driver thread DEFLATE-ing the whole
@@ -161,10 +166,7 @@ def save_gtfs(
             def _compress_one(fname: str) -> None:
                 import zlib
 
-                header = (headers.get(fname)
-                          or headers[fname.removesuffix(".txt")])
-                head = (",".join(_csv_quote(h) for h in header)
-                        + "\n").encode()
+                head = _head(fname)
                 c = zlib.compressobj(-1, zlib.DEFLATED, -15)
                 crc = zlib.crc32(head)
                 size = len(head)
@@ -201,18 +203,15 @@ def save_gtfs(
                 ) as zf:
                     for fname in ordered:
                         if fname == biggest:
-                            header = (headers.get(fname) or
-                                      headers[fname.removesuffix(".txt")])
+                            head = _head(fname)
+                            # the entry is header + staged body: both
+                            # count toward the zip64 size limit
                             with zf.open(
                                 fname, "w",
-                                force_zip64=staged_bytes[fname]
+                                force_zip64=staged_bytes[fname] + len(head)
                                 > zipfile.ZIP64_LIMIT,
                             ) as dest:
-                                dest.write(
-                                    (",".join(_csv_quote(h)
-                                              for h in header)
-                                     + "\n").encode()
-                                )
+                                dest.write(head)
                                 for p in parts_per_file[fname]:
                                     with open(p, "rb") as src:
                                         shutil.copyfileobj(src, dest)
@@ -224,13 +223,9 @@ def save_gtfs(
         else:
             os.makedirs(target, exist_ok=True)
             for fname in ordered:
-                parts = parts_per_file[fname]
-                header = headers.get(fname) or headers[fname.removesuffix(".txt")]
                 with open(os.path.join(target, fname), "wb") as dest:
-                    dest.write(
-                        (",".join(_csv_quote(h) for h in header) + "\n").encode()
-                    )
-                    for p in parts:
+                    dest.write(_head(fname))
+                    for p in parts_per_file[fname]:
                         with open(p, "rb") as src:
                             shutil.copyfileobj(src, dest)
     finally:

@@ -45,9 +45,11 @@ from __future__ import annotations
 
 import re
 from collections.abc import Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .sinks import EPOCH_COL
 
@@ -205,9 +207,10 @@ class _MarkerLease:
     """A held ``_COMPACTING`` marker plus the background thread that
     heartbeats its mtime every ``heartbeat_sec``. ``release()`` is for
     CLEAN completion only (stops the heartbeat, deletes the marker);
-    on failure call ``abandon()`` — the heartbeat stops so the marker
-    AGES, readers keep failing fast, and a later run (or ``force``)
-    can take over once it goes stale."""
+    on failure ``abandon()`` stops the heartbeat so the marker AGES,
+    readers keep failing fast, and a later run (or ``force``) can take
+    over once it goes stale. :func:`maintenance_lease` makes that
+    choice for every caller."""
 
     def __init__(self, fs: _HadoopFS, marker: str,
                  heartbeat_sec: float) -> None:
@@ -230,15 +233,6 @@ class _MarkerLease:
                 self._fs.touch(self.marker)
             except Exception:
                 return  # marker gone or fs unreachable — stop beating
-
-    @property
-    def abandoned(self) -> bool:
-        """True once :meth:`abandon` (or :meth:`release`) stopped the
-        heartbeat — how an OWNER that lent this lease to a sub-step
-        (``_lease=`` threading, e.g. ``takedown_stream_vectors``) tells
-        a mid-mutation failure (the sub-step abandoned: marker must
-        stay) from a pure refusal (untouched: owner may release)."""
-        return self._stop.is_set()
 
     def abandon(self) -> None:
         """Stop heartbeating, LEAVE the marker (failure path)."""
@@ -313,6 +307,55 @@ def _acquire_compact_marker(
     return _MarkerLease(fs, marker, heartbeat_sec)
 
 
+@contextmanager
+def maintenance_lease(
+    spark: SparkSession,
+    path: str,
+    *,
+    force: bool,
+    stale_after_sec: float,
+    fence=None,
+    lent: "_MarkerLease | None" = None,
+):
+    """Hold the heartbeated ``_COMPACTING`` marker of ``path`` for the
+    ``with`` body — the one implementation of the marker contract every
+    maintenance entry point shares:
+
+    - ``fence`` (a no-argument callable) runs under the freshly taken
+      marker, so new writers already fail fast while it checks; if it
+      raises, nothing was mutated and the marker is RELEASED clean;
+    - an exception in the body ABANDONS the marker (heartbeat stops,
+      marker stays): readers and writers keep failing fast until a
+      ``force=True`` re-run converges;
+    - a clean exit releases it.
+
+    ``lent`` borrows an owner's already-held lease instead of taking
+    one (``takedown_stream_vectors`` spans one marker across its
+    absorb → purge chain): the owner fenced it, so ``fence`` is not
+    run again, and the borrowed lease is never released here — but a
+    body failure still abandons it, because the sub-step may have
+    mutated. Yields the lease, for lending on."""
+    if lent is not None:
+        lease = lent
+    else:
+        lease = _acquire_compact_marker(
+            _HadoopFS(spark, path), path, stale_after_sec, force
+        )
+        if fence is not None:
+            try:
+                fence()
+            except BaseException:
+                lease.release()  # refusal — nothing mutated, clean marker
+                raise
+    try:
+        yield lease
+    except BaseException:
+        lease.abandon()  # heartbeat stops; the marker ages toward sweep
+        raise
+    if lent is None:
+        lease.release()
+
+
 def _epoch_dirs(path: str, fs: "_HadoopFS | None" = None) -> "dict[int, str]":
     """epoch -> directory path, from the hive layout at ``path``."""
     fs = fs or _active_fs(path)
@@ -334,6 +377,63 @@ def last_committed_epoch(checkpoint: str) -> "int | None":
             e = int(name)
             best = e if best is None or e > best else best
     return best
+
+
+def _stopped_watermark(
+    checkpoint: "str | None", assume_stopped: bool, landed
+) -> "int | None":
+    """Step 1 of a streaming takedown: prove the ingest query is
+    stopped. With ``checkpoint``, no epoch of ``landed()`` may sit
+    above the commit watermark (an ACTIVE query, or one that crashed
+    mid-epoch and will replay on restart); without one the caller must
+    assert ``assume_stopped=True``. Returns the watermark, for
+    :func:`_verify_takedown_close`."""
+    if checkpoint is None:
+        if not assume_stopped:
+            raise ValueError(
+                "pass checkpoint= so the commit watermark can prove the "
+                "ingest query is stopped, or assert assume_stopped=True "
+                "explicitly"
+            )
+        return None
+    watermark = last_committed_epoch(checkpoint)
+    in_flight = [e for e in landed() if watermark is None or e > watermark]
+    if in_flight:
+        raise RuntimeError(
+            f"epoch(s) {sorted(in_flight)} are landed above the "
+            f"checkpoint's commit watermark ({watermark}) — the "
+            "ingest query appears ACTIVE (or crashed mid-epoch and "
+            "will replay on restart); stop it before takedown"
+        )
+    return watermark
+
+
+def _verify_takedown_close(
+    late_epochs, checkpoint: "str | None", watermark: "int | None",
+    hazard: str,
+) -> None:
+    """Closing re-verification of a streaming takedown, run under the
+    still-held marker (ADVICE r12): a batch already mid-write when the
+    marker was taken can land an epoch without moving the watermark
+    until its commit file is written, so the landed epochs are
+    re-checked themselves (``late_epochs``), then the watermark.
+    Either raises with ``hazard`` — what the late rows may break — and
+    the caller's marker stays."""
+    if late_epochs:
+        raise RuntimeError(
+            f"epoch(s) {sorted(late_epochs)} landed during takedown (an "
+            f"ingest batch was mid-write when it started): {hazard} — "
+            "stop the query and re-run with force=True"
+        )
+    if checkpoint is not None:
+        now = last_committed_epoch(checkpoint)
+        if now != watermark:
+            raise RuntimeError(
+                f"the ingest checkpoint's commit watermark moved during "
+                f"takedown ({watermark} -> {now}): batches landed "
+                f"concurrently — {hazard}; stop the query and re-run "
+                "with force=True"
+            )
 
 
 def _first_arrival(df: DataFrame, key_cols: "Sequence[str]") -> DataFrame:
@@ -514,19 +614,6 @@ def _takedown_scan(
     return per_part, stats
 
 
-def _emptied_combos(
-    per_part, part_cols: "Sequence[str]"
-) -> "set[tuple]":
-    """The partition combos a takedown leaves with zero rows — as raw
-    value-STRING tuples matching hive directory names (split from the
-    SPARK-side partition key, never ``str(v)``), ready for
-    :func:`_delete_leaf_partitions`."""
-    return {
-        split_partition_key(pk, part_cols)
-        for _, pk, n, r in per_part if n == r
-    }
-
-
 def _delete_leaf_partitions(
     fs: _HadoopFS,
     root: str,
@@ -579,6 +666,64 @@ def _delete_leaf_partitions(
     if part_cols and victims:
         walk(root, 0, ())
     return deleted
+
+
+def _takedown_partitions(
+    spark: SparkSession,
+    fs: _HadoopFS,
+    path: str,
+    ids,
+    part_cols: "Sequence[str]",
+    key_col: str,
+    sort_by: "Sequence[str]",
+    target_shards: int = 1,
+) -> "dict[str, int]":
+    """Remove ``ids`` from the hive-partitioned corpus at ``path``,
+    rewriting only the partitions that hold one — the kernel of
+    ``remove_from_corpus`` and ``takedown_stream_corpus``, run under
+    the caller's held marker. One column-pruned :func:`_takedown_scan`
+    locates the affected partitions (and does the before/after
+    bookkeeping), a partition-pruned anti-join rewrites exactly those
+    through a dynamic partition overwrite with the writer's own
+    shard/sort law, and partitions left empty have their directories
+    deleted (the overwrite only replaces partitions it writes): the
+    2-scan minimum. The removal ids are checkpointed once (scan and
+    rewrite both broadcast them) and freed on the way out, success or
+    not. Returns the :func:`_takedown_scan` stats."""
+    from ..sources.corpus import write_corpus
+    from ..tools.checkpoints import free_local_checkpoint
+
+    rid_cp = _rid_frame(spark, ids).localCheckpoint(eager=True)
+    rid = F.broadcast(rid_cp)
+    try:
+        full = spark.read.parquet(path)
+        per_part, stats = _takedown_scan(full, rid, part_cols, key_col)
+        if per_part:
+            pred = partition_membership_pred(
+                part_cols,
+                [combo for combo, _, _, _ in per_part],
+                [pk for _, pk, _, _ in per_part],
+            )
+            keep = full.filter(pred).join(
+                rid, full[key_col].cast("string") == rid["__rid"],
+                "left_anti",
+            )
+            write_corpus(
+                keep, path, partition_by=tuple(part_cols),
+                sort_by=tuple(sort_by), target_shards=target_shards,
+                mode="overwrite", dynamic_overwrite=True,
+            )
+            # emptied combos as raw value-STRING tuples matching hive
+            # directory names: split from the SPARK-side partition key,
+            # never str(v)
+            stats["partitions_deleted"] = _delete_leaf_partitions(
+                fs, path, part_cols,
+                {split_partition_key(pk, part_cols)
+                 for _, pk, n, r in per_part if n == r},
+            )
+    finally:
+        free_local_checkpoint(rid_cp)
+    return stats
 
 
 def _sweep_stale_partitions(
@@ -752,14 +897,13 @@ def compact_flat_dir(
     from pyspark.sql import Observation
 
     fs = _HadoopFS(spark, path)
-    lease = _acquire_compact_marker(fs, path, stale_after_sec, force)
-    try:
+    with maintenance_lease(spark, path, force=force,
+                           stale_after_sec=stale_after_sec):
         files_before = fs.count_files(path)
         # the few-files fast path must not skip a row-level rewrite:
         # with a transform the fold IS the operation (e.g.
         # DedupIndex.remove's anti-join), not just file maintenance
         if transform is None and files_before <= max(target_shards, 1):
-            lease.release()
             return {"files_before": files_before,
                     "files_after": files_before, "skipped": 1}
         # the staging dir hides behind a leading dot: parquet partition
@@ -839,11 +983,70 @@ def compact_flat_dir(
         for name in old:
             fs.delete(f"{path}/{name}")
         fs.delete(staging)
-    except BaseException:
-        lease.abandon()  # heartbeat stops; the marker ages toward sweep
-        raise
-    lease.release()
     return {"files_before": files_before, "files_after": moved,
             "skipped": 0,
             "rows_before": int(obs_in.get["rows"]),
             "rows_after": int(obs_out.get["rows"])}
+
+
+def takedown_fold(
+    spark: SparkSession,
+    root: str,
+    targets: "Sequence[tuple[str, str, Sequence[str], Sequence[str], str]]",
+    ids,
+    *,
+    force: bool,
+    stale_after_sec: float,
+    fence=None,
+    lent: "_MarkerLease | None" = None,
+) -> "dict[str, dict[str, int]]":
+    """Delete every row whose id is in ``ids`` from the flat artifact
+    dirs under ``root`` — the shared body of ``DedupIndex.remove`` and
+    ``AnnIndex.remove``. ``targets`` are ``(name, ddl, key_cols,
+    cluster_by, id_col)``: each ``{root}/{name}`` is rewritten by
+    :func:`compact_flat_dir`'s crash-safe staged fold with a broadcast
+    anti-join on ``id_col`` (the ids cast to that column's type), the
+    folds overlapping (independent dirs, each with its own per-dir
+    marker; guide §2.6). Row counts ride the fold jobs as observed
+    metrics.
+
+    One ROOT marker (:func:`maintenance_lease`, with ``fence`` and
+    ``lent`` as there) spans every fold, so a crash at ANY point —
+    including between two folds — leaves it, failing readers fast
+    until a ``force=True`` re-run converges (the anti-join is
+    idempotent). ``ids`` is a list/tuple or a single-column DataFrame;
+    a DataFrame is checkpointed once under the marker (each fold's
+    broadcast would otherwise re-evaluate the caller's upstream plan)
+    and freed when the folds are done, success or not. Returns
+    per-target :func:`compact_flat_dir` stats."""
+    from ..tools.checkpoints import free_local_checkpoint
+    from ..tools.concurrency import parallel_writes
+
+    stats: "dict[str, dict[str, int]]" = {}
+    with maintenance_lease(spark, root, force=force,
+                           stale_after_sec=stale_after_sec,
+                           fence=fence, lent=lent):
+        rid, rid_cp = _rid_frame(spark, ids), None
+        if isinstance(ids, DataFrame):
+            rid = rid_cp = rid.localCheckpoint(eager=True)
+
+        def fold_one(name, ddl, key_cols, cluster_by, id_col):
+            id_type = StructType.fromDDL(ddl)[id_col].dataType.simpleString()
+            keyed = F.broadcast(
+                rid.select(F.col("__rid").cast(id_type).alias("__rid"))
+            )
+            # resolved through the module at call time, so a wrapped
+            # or patched compact_flat_dir sees every fold
+            stats[name] = compact_flat_dir(
+                spark, f"{root}/{name}", ddl, key_cols, force=force,
+                stale_after_sec=stale_after_sec,
+                transform=lambda df: df.join(
+                    keyed, df[id_col] == keyed["__rid"], "left_anti"),
+                cluster_by=cluster_by,
+            )
+
+        try:
+            parallel_writes(*[lambda t=t: fold_one(*t) for t in targets])
+        finally:
+            free_local_checkpoint(rid_cp)
+    return stats

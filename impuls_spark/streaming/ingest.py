@@ -344,37 +344,17 @@ def takedown_stream_corpus(
     the wholesale index rebuild are both idempotent)."""
     from ..llm.dedup import DedupIndex
     from .compact import (
-        _acquire_compact_marker,
-        _delete_leaf_partitions,
-        _emptied_combos,
         _epoch_dirs,
-        _rid_frame,
-        _takedown_scan,
-        last_committed_epoch,
-        partition_membership_pred,
+        _stopped_watermark,
+        _takedown_partitions,
+        _verify_takedown_close,
+        maintenance_lease,
     )
 
     # -- 1. stopped-query verification --------------------------------
-    watermark = None
-    if checkpoint is not None:
-        watermark = last_committed_epoch(checkpoint)
-        in_flight = [
-            e for e in _epoch_dirs(corpus_path)
-            if watermark is None or e > watermark
-        ]
-        if in_flight:
-            raise RuntimeError(
-                f"epoch(s) {sorted(in_flight)} are landed above the "
-                f"checkpoint's commit watermark ({watermark}) — the "
-                "ingest query appears ACTIVE (or crashed mid-epoch and "
-                "will replay on restart); stop it before takedown"
-            )
-    elif not assume_stopped:
-        raise ValueError(
-            "pass checkpoint= so the commit watermark can prove the "
-            "ingest query is stopped, or assert assume_stopped=True "
-            "explicitly"
-        )
+    watermark = _stopped_watermark(
+        checkpoint, assume_stopped, lambda: _epoch_dirs(corpus_path)
+    )
 
     # -- banding parameters: manifest-authoritative ---------------------
     manifest = _read_manifest(spark, f"{corpus_path}/_index/manifest")
@@ -394,18 +374,10 @@ def takedown_stream_corpus(
             for k, v in passed.items()
         }
     key = meta["id_col"]
-    rid_cp = _rid_frame(spark, ids).localCheckpoint(eager=True)
-    rid = F.broadcast(rid_cp)
-
     fs = _HadoopFS(spark, corpus_path)
-    corpus_lease = _acquire_compact_marker(
-        fs, corpus_path, stale_after_sec, force
-    )
-    index_lease = None
-    try:
-        index_lease = _acquire_compact_marker(
-            fs, f"{corpus_path}/_index", stale_after_sec, force
-        )
+    opts = dict(force=force, stale_after_sec=stale_after_sec)
+    with maintenance_lease(spark, corpus_path, **opts), \
+            maintenance_lease(spark, f"{corpus_path}/_index", **opts):
         # landed-epoch snapshot for the CLOSING re-check (1b), taken
         # UNDER both markers immediately before the scan lists files: a
         # batch already mid-write when the markers were taken can land
@@ -418,30 +390,10 @@ def takedown_stream_corpus(
         # positives.
         landed_before = set(_epoch_dirs(corpus_path))
         # -- 2. partition-pruned corpus filter -------------------------
-        # one column-pruned pass fuses locate + before/after counts +
-        # survivor/emptied sets (the 2-scan minimum with the rewrite)
-        part_cols = [EPOCH_COL, *partition_by]
-        full = spark.read.parquet(corpus_path)
-        per_part, stats = _takedown_scan(full, rid, part_cols, key)
-        if per_part:
-            pred = partition_membership_pred(
-                part_cols,
-                [combo for combo, _, _, _ in per_part],
-                [pk for _, pk, _, _ in per_part],
-            )
-            keep = full.filter(pred).join(
-                rid, full[key].cast("string") == rid["__rid"],
-                "left_anti",
-            )
-            write_corpus(
-                keep, corpus_path,
-                partition_by=tuple(part_cols), sort_by=(key,),
-                mode="overwrite", dynamic_overwrite=True,
-            )
-            stats["partitions_deleted"] = _delete_leaf_partitions(
-                fs, corpus_path, part_cols,
-                _emptied_combos(per_part, part_cols),
-            )
+        stats = _takedown_partitions(
+            spark, fs, corpus_path, ids, [EPOCH_COL, *partition_by],
+            key, (key,),
+        )
         # -- 3. flat tracked index rebuild over the retained corpus ----
         # (raw read, not read_corpus: this run HOLDS the corpus marker
         # read_corpus fails fast on; listing is post-rewrite by order)
@@ -455,40 +407,14 @@ def takedown_stream_corpus(
             shingle_n=meta["shingle_n"], track_ids=True,
         )
         # -- 1b. closing re-verification, still under both markers ----
-        # directories first: an epoch landed by a batch that was
-        # mid-write when the markers were taken escaped the rewrite and
-        # the rebuilt index doesn't cover it — the watermark alone
-        # misses it until the commit file lands (ADVICE r12 twin)
-        new_epochs = set(_epoch_dirs(corpus_path)) - landed_before
-        if new_epochs:
-            raise RuntimeError(
-                f"epoch(s) {sorted(new_epochs)} landed during takedown "
-                "(an ingest batch was mid-write when it started): the "
-                "filtered corpus and rebuilt index do not cover them — "
-                "stop the query and re-run with force=True"
-            )
-        if checkpoint is not None:
-            now = last_committed_epoch(checkpoint)
-            if now != watermark:
-                raise RuntimeError(
-                    f"the ingest checkpoint's commit watermark moved "
-                    f"during takedown ({watermark} -> {now}): batches "
-                    "landed concurrently and the rebuilt index may not "
-                    "cover them — stop the query and re-run with "
-                    "force=True"
-                )
-    except BaseException:
-        if index_lease is not None:
-            index_lease.abandon()
-        corpus_lease.abandon()  # markers stay: readers must fail fast
-        raise
-    index_lease.release()
-    corpus_lease.release()
-    # every consumer (scan, rewrite, rebuild) has fully evaluated —
-    # free the takedown-ids checkpoint deterministically (guide §5)
-    from ..tools.checkpoints import free_local_checkpoint
-
-    free_local_checkpoint(rid_cp)
+        # an epoch landed by a batch that was mid-write when the
+        # markers were taken escaped the rewrite, and the rebuilt index
+        # doesn't cover it (ADVICE r12 twin)
+        _verify_takedown_close(
+            set(_epoch_dirs(corpus_path)) - landed_before,
+            checkpoint, watermark,
+            "the filtered corpus and rebuilt index may not cover them",
+        )
     return {
         "corpus": stats,
         "index": {"rebuilt": True, "track_ids": True},
@@ -529,7 +455,7 @@ def restore_stream_index_layout(
     entry point. Returns ``{hashes, bands}`` restored row counts."""
     import json
 
-    from .compact import _acquire_compact_marker, _HadoopFS
+    from .compact import maintenance_lease
 
     index_path = f"{corpus_path}/_index"
     manifest = _read_manifest(spark, f"{index_path}/manifest")
@@ -543,9 +469,8 @@ def restore_stream_index_layout(
 
     tracked = manifest.get("track_ids", False)
     suffix = ID_COL_SUFFIX if tracked else ""
-    fs = _HadoopFS(spark, index_path)
-    lease = _acquire_compact_marker(fs, index_path, stale_after_sec, force)
     counts = {}
+
     def _restore_one(name, schema, cols):
         # one artifact's freeze -> count -> rewrite pipeline; hashes
         # and bands are independent DIRS under the one held root
@@ -574,7 +499,8 @@ def restore_stream_index_layout(
 
     from ..llm.probe import parallel_writes
 
-    try:
+    with maintenance_lease(spark, index_path, force=force,
+                           stale_after_sec=stale_after_sec):
         parallel_writes(
             lambda: _restore_one("hashes", HASH_SCHEMA + suffix, ["__h"]),
             lambda: _restore_one("bands", BAND_SCHEMA + suffix,
@@ -590,8 +516,4 @@ def restore_stream_index_layout(
         single_row_df(
             spark, "manifest string", json.dumps(stream_meta)
         ).write.mode("overwrite").parquet(f"{index_path}/manifest")
-    except BaseException:
-        lease.abandon()  # readers and restarts must fail fast
-        raise
-    lease.release()
     return counts

@@ -19,18 +19,31 @@ has its lineage truncated, so a use after free raises
 from __future__ import annotations
 
 
-def free_local_checkpoint(*dfs) -> None:
+#: Single-child plan nodes a checkpoint may hide under: a projection
+#: (``cp.select(...)``), a hint (``F.broadcast(cp)``) or an alias.
+_WRAPPERS = ("Project", "ResolvedHint", "SubqueryAlias")
+
+
+def free_local_checkpoint(*dfs) -> int:
     """Unpersist the checkpoint blocks behind locally-checkpointed
-    DataFrames, best-effort (non-blocking). A frame that is not backed
-    by a ``LogicalRDD`` (not actually checkpointed) is skipped; any
+    DataFrames, best-effort (non-blocking), and return how many RDDs
+    were unpersisted — so a caller or test can prove the release
+    happened. A frame is walked down through single-child
+    projection/hint/alias nodes to its ``LogicalRDD``; a frame with no
+    ``LogicalRDD`` there (not actually checkpointed) is skipped; any
     py4j/internal failure degrades to the old GC-eventually behaviour
     rather than raising into the caller's write path."""
+    freed = 0
     for df in dfs:
         if df is None:
             continue
         try:
             plan = df._jdf.queryExecution().analyzed()
+            while plan.getClass().getSimpleName() in _WRAPPERS:
+                plan = plan.child()
             if plan.getClass().getSimpleName() == "LogicalRDD":
                 plan.rdd().unpersist(False)
+                freed += 1
         except Exception:  # noqa: BLE001 — cleanup must never fail a job
             pass
+    return freed

@@ -92,3 +92,9 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if item.name.split("[", 1)[0] in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    # tests named only by explicit node ids run even when slow: the
+    # default `-m 'not slow'` from addopts would otherwise deselect them
+    # silently. An -m given on the command line is left as is.
+    explicit_m = any(a.startswith("-m") for a in config.invocation_params.args)
+    if not explicit_m and config.args and all("::" in a for a in config.args):
+        config.option.markexpr = ""

@@ -35,6 +35,17 @@ def test_free_local_checkpoint_releases_blocks(spark):
     assert _n_persistent(spark) == base
 
 
+@pytest.mark.parametrize("wrap", [
+    lambda cp: cp.select((F.col("id") * 2).alias("x")),  # Project
+    F.broadcast,                                         # ResolvedHint
+], ids=["select", "broadcast"])
+def test_free_local_checkpoint_sees_through_wrappers(spark, wrap):
+    base = _n_persistent(spark)
+    cp = spark.range(50).localCheckpoint(eager=True)
+    assert free_local_checkpoint(wrap(cp)) == 1
+    assert _n_persistent(spark) == base
+
+
 def test_free_local_checkpoint_skips_plain_frames(spark):
     # not checkpointed, not persisted: a no-op, never an error
     df = spark.range(10).select((F.col("id") * 2).alias("x"))
@@ -112,3 +123,80 @@ def test_remove_stats_ride_the_fold_job(spark, tmp_path):
     assert stats["bands"]["rows_after"] == spark.read.parquet(
         f"{path}/bands").count()
     assert stats["hashes"]["rows_before"] - stats["hashes"]["rows_after"] == 2
+
+
+def _dedup_remove_refused(spark, tmp_path):
+    from impuls_spark.llm.dedup import DedupIndex
+    from impuls_spark.streaming.compact import compact_marker_path
+
+    path = str(tmp_path / "idx")
+    DedupIndex.build(_docs(spark, 0, 20), path, track_ids=True)
+    idx = DedupIndex.load(spark, path)
+    open(compact_marker_path(path), "w").close()  # a live holder
+    return lambda: idx.remove(spark.range(3).select(
+        F.col("id").alias("doc_id"))), RuntimeError
+
+
+def _ann_remove(spark, tmp_path):
+    from impuls_spark.llm.similarity import AnnIndex
+
+    from .test_ann_streaming import _build_saved
+
+    path = _build_saved(spark, tmp_path)[0]
+    ids = spark.range(3).select(F.col("id").alias("vec_id"))
+    return lambda: AnnIndex.remove(spark, path, ids), None
+
+
+def _corpus_refused(spark, tmp_path):
+    from impuls_spark.sources.corpus import remove_from_corpus
+
+    from .test_takedown_fixes import _epoch_corpus
+
+    path = str(tmp_path / "corpus")
+    _epoch_corpus(spark, path)
+    return lambda: remove_from_corpus(spark, path, [1, 2]), ValueError
+
+
+def _shards(spark, tmp_path, hit: bool):
+    import hashlib
+    import os
+
+    from impuls_spark.sources.corpus import (
+        remove_from_shards,
+        write_training_shards,
+    )
+
+    path = str(tmp_path / "shards")
+    write_training_shards(
+        spark.createDataFrame([(i, f"doc {i}") for i in range(3)],
+                              "doc_id long, text string"),
+        path, n_shards=256,
+    )
+    present = {d[len("shard="):] for d in os.listdir(path)
+               if d.startswith("shard=")}
+    # 3 docs fill at most 3 of 256 shards: find an id hashing elsewhere
+    absent = next(i for i in range(1000, 2000) if hashlib.md5(
+        f"shard:{i}".encode()).hexdigest()[:2] not in present)
+    ids = [0, 1] if hit else [absent]
+    return lambda: remove_from_shards(spark, path, ids), None
+
+
+@pytest.mark.parametrize("case", [
+    _dedup_remove_refused,
+    _ann_remove,
+    _corpus_refused,
+    lambda spark, tmp: _shards(spark, tmp, hit=True),
+    lambda spark, tmp: _shards(spark, tmp, hit=False),
+], ids=["dedup_remove_refused", "ann_remove", "corpus_refused",
+        "shards_removed", "shards_no_affected"])
+def test_takedowns_release_their_id_checkpoints(spark, tmp_path, case):
+    """Every takedown entry point frees the removal-id checkpoint it
+    takes — on success, on a refusal and on an early return."""
+    run, raises = case(spark, tmp_path)
+    base = _n_persistent(spark)
+    if raises is None:
+        run()
+    else:
+        with pytest.raises(raises):
+            run()
+    assert _n_persistent(spark) <= base

@@ -139,3 +139,25 @@ def test_gtfs_zip_parallel_assembly_is_byte_identical(feed, tmp_path):
     save_gtfs(feed, headers, out_zip2, ensure_order=True)
     with open(out_zip, "rb") as a, open(out_zip2, "rb") as b:
         assert a.read() == b.read()
+
+
+def test_gtfs_zip64_decision_counts_the_header(feed, tmp_path, monkeypatch):
+    """The dominant entry streams header + staged CSV body, so its zip64
+    decision must count both: with the size limit just below the entry
+    size (above the staged body alone), the save still succeeds."""
+    headers = {
+        "trips.txt": ["route_id", "service_id", "trip_id"],
+        "stop_times.txt": ["trip_id", "arrival_time", "departure_time",
+                           "stop_id", "stop_sequence"],
+    }
+    ref = str(tmp_path / "ref.zip")
+    save_gtfs(feed, headers, ref, ensure_order=True)
+    with zipfile.ZipFile(ref) as zf:
+        size = zf.getinfo("stop_times.txt").file_size
+        want = zf.read("stop_times.txt")
+    # header line > 1 byte, so size - 1 >= the staged body alone
+    monkeypatch.setattr(zipfile, "ZIP64_LIMIT", size - 1)
+    out = str(tmp_path / "zip64.zip")
+    save_gtfs(feed, headers, out, ensure_order=True)
+    with zipfile.ZipFile(out) as zf:
+        assert zf.read("stop_times.txt") == want

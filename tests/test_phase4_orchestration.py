@@ -258,6 +258,42 @@ def test_multi_file(spark, two_version_inputs, tmp_path):
     assert merged2["trips"].count() == 2 * 186
 
 
+def test_multi_file_newer_version_rebuilds_truncated_snapshot(
+    spark, two_version_inputs, tmp_path
+):
+    """A snapshot is truncated to its version's validity window, so when
+    a newer version appears the older snapshot must be rebuilt too, not
+    only when its input changes: the incremental merge equals a cold
+    build, with no older-version service on or after the newer start."""
+    from impuls_spark.operators.calendars import active_days
+    from tests.fixtures.make_feed import write_feed
+
+    v1, _ = two_version_inputs
+    def mid_year(rows):
+        for c in rows["calendar.txt"]:
+            c["start_date"] = "20261201"
+            c["end_date"] = "20271130"
+
+    v_new = write_feed(str(tmp_path / "b.zip"), mutate=mid_year)
+    versions = [IntermediateFeed(LocalResource(v1), "a", D(2026, 6, 1)),
+                IntermediateFeed(LocalResource(v_new), "b", D(2026, 12, 1))]
+
+    def run(ws, n):
+        return MultiFile(
+            provider=lambda: versions[:n], for_date=D(2026, 6, 1),
+            options=PipelineOptions(workspace_directory=str(ws)),
+        ).run(spark)
+
+    def days(feed):
+        return sorted(tuple(r) for r in active_days(feed).collect())
+
+    run(tmp_path / "ws", 1)
+    incremental = days(run(tmp_path / "ws", 2))
+    assert incremental == days(run(tmp_path / "cold", 2))
+    assert not [d for cal, d in incremental
+                if cal.startswith("a:") and d >= D(2026, 12, 1)]
+
+
 def test_multi_file_prunes_outdated(spark):
     """Reference prune_outdated_feeds semantics (multi_file.py:141-158,
     pinned by reference tests/test_multi_file.py:124-137): keep the feed
